@@ -216,6 +216,17 @@ object SparkEntry {
     }).toInt
   }
 
+  /** Per-query (neighbor id, score) sets of the single-query serving
+    * plans for `ids`, tagged and unioned so they run as ONE collect. An
+    * empty `ids` gives an empty map (no plan to union), so the callers'
+    * per-id `forall` comparisons hold vacuously. */
+  private[graft] def singleByQuery(ids: Array[Long])(
+      single: Long => DataFrame): Map[Long, Set[(Long, Double)]] =
+    ids.map(qid => single(qid).withColumn("__q", lit(qid)))
+      .reduceOption(_.unionByName(_)).fold(Map.empty[Long, Set[(Long, Double)]])(
+        _.collect().groupBy(_.getLong(2))
+          .map { case (q, rs) => q -> rs.map(r => (r.getLong(0), r.getDouble(1))).toSet })
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Bloom-accelerated semi-join: lineitems of high-value orders, the
     * filter standing in for the runtime pre-filter a 100 TB fact scan
@@ -1401,18 +1412,12 @@ object SparkEntry {
           .groupBy(_.getLong(0))
           .map { case (q, rs) =>
             q -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSet }
-      def singleByQuery(single: Long => DataFrame): Map[Long, Set[(Long, Double)]] =
-        sampleIds.map(qid => single(qid).withColumn("__q", lit(qid)))
-          .reduce(_.unionByName(_)).collect()
-          .groupBy(_.getLong(2))
-          .map { case (q, rs) =>
-            q -> rs.map(r => (r.getLong(0), r.getDouble(1))).toSet }
-      val ivfSingle = singleByQuery(qid => graft.ops.Similarity.ivfTopKQuantized(
+      val ivfSingle = singleByQuery(sampleIds)(qid => graft.ops.Similarity.ivfTopKQuantized(
         ivfIndex, sampleVecs(qid), centroids, k, nprobe = 2))
       val ivfBatchSample = batchByQuery(ivfBatch)
       val ivfMatches = sampleIds.forall(qid =>
         ivfBatchSample.getOrElse(qid, Set.empty) == ivfSingle.getOrElse(qid, Set.empty))
-      val lshSingle = singleByQuery(qid => graft.ops.Similarity.lshTopKIndexed(
+      val lshSingle = singleByQuery(sampleIds)(qid => graft.ops.Similarity.lshTopKIndexed(
         lshIndex, "embedding", sampleVecs(qid), k, nPlanes = 10))
       val lshBatchSample = batchByQuery(lshBatch)
       val lshMatches = sampleIds.forall(qid =>
@@ -1474,13 +1479,8 @@ object SparkEntry {
         .collect().groupBy(_.getLong(0))
         .map { case (q, rs) =>
           q -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSet }
-      val singleSample = sampleIds.map(qid =>
-          graft.ops.Similarity.ivfTopKPq(index, sampleVecs(qid), cents, cb, k, nprobe = 2)
-            .withColumn("__q", lit(qid)))
-        .reduce(_.unionByName(_)).collect()
-        .groupBy(_.getLong(2))
-        .map { case (q, rs) =>
-          q -> rs.map(r => (r.getLong(0), r.getDouble(1))).toSet }
+      val singleSample = singleByQuery(sampleIds)(qid =>
+        graft.ops.Similarity.ivfTopKPq(index, sampleVecs(qid), cents, cb, k, nprobe = 2))
       val matches = sampleIds.forall(qid =>
         batchSample.getOrElse(qid, Set.empty[(Long, Double)]) ==
           singleSample.getOrElse(qid, Set.empty[(Long, Double)]))

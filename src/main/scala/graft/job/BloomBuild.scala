@@ -34,7 +34,11 @@ import graft.functions.{abloom_key_hash, bloom_agg_hashed, bloom_union_agg}
   *  3. [[partitioned]] / [[resume]] — checkpointed build with
   *     per-partition lineage + metrics, resumable: completed partitions
   *     are skipped on re-run and replays are safe because OR-merge is
-  *     idempotent.
+  *     idempotent. A fresh build ORs the partition filters on the driver
+  *     as each batch's checkpoint append commits, in ascending partition
+  *     order through `bloom_union_agg`'s own steps, so its bytes equal the
+  *     checkpoint merge's without reading the checkpoint back; a resume
+  *     merges the checkpoint ([[SketchBuild.merge]]).
   */
 object BloomBuild {
 

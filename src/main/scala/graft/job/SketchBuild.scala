@@ -1,7 +1,9 @@
 package graft.job
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,7 +28,9 @@ trait PartitionSketcher extends Serializable {
   /** Fold the projected (non-null) value at ordinal 0 into the buffer. */
   def update(buffer: AnyRef, row: InternalRow): Unit
   def toBytes(buffer: AnyRef): Array[Byte]
-  /** Declarative union aggregate over serialized partials. */
+  /** Declarative union aggregate over serialized partials. A fresh
+    * [[SketchBuild.resume]] also drives its `TypedImperativeAggregate`
+    * directly on the driver. */
   def unionAgg(sketches: Column): Column
   /** Pairwise serialized merge — the task-side kernel of
     * [[SketchBuild.merge]]'s tree mode. Must be safe to apply in any
@@ -258,6 +262,13 @@ object PartitionSketcher {
   * any number of times — one canonical merge order and therefore
   * byte-identical output for every sketch family (the same canonical-
   * order discipline as `Sbf.toBytes`, see CLAUDE.md round 3).
+  * Where that fold runs depends on the checkpoint: a FRESH build (no
+  * checkpointed partials yet) folds on the driver as each batch's append
+  * commits — the partials arrive in ascending partition_id, and the fold
+  * drives the family's union aggregate through the same update /
+  * serialize / deserialize / merge / eval steps as [[merge]]'s flat plan,
+  * so the bytes are identical without reading the checkpoint back; a
+  * resume over existing partials re-reads them all through [[merge]].
   *
   * At 100 TB: the lineage table is O(partitions) rows of O(sketch)
   * bytes; `batchSize` bounds lost work per failure; the merge input is
@@ -292,14 +303,55 @@ object SketchBuild {
           .select("partition_id").collect().map(_.getInt(0)).toSet
       else Set.empty
     val todo = (0 until nParts).filterNot(done)
+    // a fresh build folds its own partials as each batch commits: `todo`
+    // is ascending and runJob returns results in partition-id order, so
+    // the driver sees exactly the canonical order `merge` would re-read
+    // from the checkpoint
+    val fold =
+      if (done.nonEmpty) None else typedUnionAgg(sketcher).map(new PartialFold(_))
 
     todo.grouped(batchSize).foreach { batch =>
       val rows = buildPartitions(spark, projected, sketcher, batch)
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), checkpointSchema)
         .write.mode(SaveMode.Append).parquet(checkpointDir)
+      fold.foreach(f => rows.foreach(r => f.add(r.getAs[Array[Byte]](1))))
     }
-    merge(spark, sketcher, checkpointDir)
+    fold match {
+      case Some(f) => f.result()
+      case None => merge(spark, sketcher, checkpointDir)
+    }
+  }
+
+  /** The sketcher's union aggregate bound to ordinal 0 of a one-column
+    * binary row; None when it is not a `TypedImperativeAggregate` (every
+    * graft family's is), and such a build merges through [[merge]]. */
+  private def typedUnionAgg(sketcher: PartitionSketcher): Option[TypedImperativeAggregate[Any]] =
+    GraftBridge.expression(sketcher.unionAgg(
+        GraftBridge.column(BoundReference(0, BinaryType, nullable = false))))
+      .collectFirst { case f: TypedImperativeAggregate[_] =>
+        f.asInstanceOf[TypedImperativeAggregate[Any]] }
+
+  /** Driver-side fold of serialized partials through the family's own
+    * union aggregate, running the steps of [[merge]]'s flat plan — update
+    * per partial, serialize, deserialize, merge into a fresh buffer, eval
+    * — so the bytes equal that plan's for every family, the order-
+    * sensitive ones included, when the partials arrive in ascending
+    * partition order.
+    */
+  private final class PartialFold(agg: TypedImperativeAggregate[Any]) {
+    private val row = new GenericInternalRow(1)
+    private var buffer = agg.createAggregationBuffer()
+
+    def add(partial: Array[Byte]): Unit = {
+      row.update(0, partial)
+      buffer = agg.update(buffer, row)
+    }
+
+    def result(): Array[Byte] = {
+      val partial = agg.deserialize(agg.serialize(buffer))
+      agg.eval(agg.merge(agg.createAggregationBuffer(), partial)).asInstanceOf[Array[Byte]]
+    }
   }
 
   /** Canonical-order merge of every checkpointed partial.
@@ -394,10 +446,16 @@ object SketchBuild {
     }
   }
 
+  /** Whether `dir` holds any data file. Names starting with `_` or `.`
+    * (the `_layout` sidecar, `_SUCCESS`, checksums) are skipped, as
+    * Spark's reader skips them. */
   private def checkpointExists(spark: SparkSession, dir: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(path) && fs.listStatus(path).nonEmpty
+    fs.exists(path) && fs.listStatus(path).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
   }
 
   /** Partition-layout guard: lineage rows are only addressable by

@@ -211,6 +211,10 @@ case class SketchPartialAggExec(
         }
 
         private def aggregateChunk(): Unit = {
+          // only called once the previous chunk is fully drained (hasNext),
+          // and next() serializes each group as it emits it, so the old
+          // buffers are dead: drop them before this chunk fills the budget
+          java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null)
           java.util.Arrays.fill(occ, false)
           n = 0
           nullBufs = null

@@ -1,7 +1,11 @@
 package graft.job
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -256,6 +260,83 @@ class SketchBuildSpec extends SparkTestBase {
     val resumed = SketchBuild.resume(longs, col("id"), PartitionSketcher.hll(), dir, batchSize = 2)
     assert(java.util.Arrays.equals(resumed, clean),
       "crash-resumed build must match the undisturbed build")
+  }
+
+  /** Runs `body`, returning its value, the Spark jobs it started and the
+    * physical plans of the SQL executions it ran. */
+  private def observed[T](body: => T): (T, Int, Seq[String]) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val result = try {
+      val r = body
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (result, jobs.get(), plans.asScala.toSeq)
+  }
+
+  private def readsParquet(plans: Seq[String]): Boolean =
+    plans.exists(_.contains("Scan parquet"))
+
+  test("fresh build runs only the build and checkpoint-write jobs, never reading its checkpoint") {
+    val sk = PartitionSketcher.hll()
+    val dir = tmp()
+    // 7 partitions <= batchSize: one build job, one append
+    val (bytes, jobs, plans) = observed(SketchBuild.resume(longs, col("id"), sk, dir))
+    assert(jobs === 2, s"plans: $plans")
+    assert(!readsParquet(plans), s"a fresh build read its checkpoint: $plans")
+    assert(java.util.Arrays.equals(bytes, SketchBuild.merge(spark, sk, dir)))
+  }
+
+  test("fresh-build fold equals merge() over the checkpoint it leaves, for every family") {
+    Seq(
+      PartitionSketcher.bloom(n, 0.01),
+      PartitionSketcher.hll(),
+      PartitionSketcher.cms(0.01, 0.01),
+      PartitionSketcher.tdigest(),
+      PartitionSketcher.kll(),
+      PartitionSketcher.cbf(n, 0.01),
+      PartitionSketcher.sbf(1024, 0.001),
+      PartitionSketcher.kmvSample(256, previewChars = 4),
+      PartitionSketcher.weightedSample((col("id") % 97 + 1).cast("double"), 256),
+      PartitionSketcher.kmv(256),
+      PartitionSketcher.misraGries(64)).foreach { sk =>
+      val dir = tmp()
+      // batchSize < partitions: the fold spans three appended batches
+      val fresh = SketchBuild.resume(longs, col("id"), sk, dir, batchSize = 3)
+      assert(java.util.Arrays.equals(fresh, SketchBuild.merge(spark, sk, dir)),
+        s"fold != merge for $sk")
+    }
+  }
+
+  test("a dir holding only _layout is fresh; lineage without _layout still resumes") {
+    val sk = PartitionSketcher.hll()
+    val dir = tmp()
+    Files.createDirectories(Paths.get(dir))
+    Files.write(Paths.get(dir, "_layout"), "7".getBytes("UTF-8"))
+    val (bytes, jobs, plans) = observed(SketchBuild.resume(longs, col("id"), sk, dir))
+    assert(jobs === 2 && !readsParquet(plans), s"$jobs jobs, plans: $plans")
+
+    val partialDir = tmp()
+    SketchBuild.lineage(spark, dir)
+      .filter(col("partition_id").isin(0, 2, 5))
+      .write.parquet(partialDir)
+    assert(!Files.exists(Paths.get(partialDir, "_layout")))
+    val (resumed, _, resumePlans) = observed(SketchBuild.resume(longs, col("id"), sk, partialDir))
+    assert(readsParquet(resumePlans), "a resume must read the checkpointed lineage")
+    assert(java.util.Arrays.equals(resumed, bytes))
+    // the checkpointed partitions were skipped, not rebuilt
+    val pids = SketchBuild.lineage(spark, partialDir)
+      .select("partition_id").collect().map(_.getInt(0)).sorted
+    assert(pids.toSeq === (0 until 7))
   }
 
   test("null values are skipped and excluded from lineage row counts") {

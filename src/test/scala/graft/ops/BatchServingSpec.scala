@@ -221,6 +221,13 @@ class BatchServingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("harness single-query union groups per query id; no sampled ids is an empty map") {
+    val single = (qid: Long) => Seq((qid * 10, 0.5), (qid * 10 + 1, 0.25)).toDF("id", "score")
+    assert(graft.SparkEntry.singleByQuery(Array(3L, 7L))(single) === Map(
+      3L -> Set((30L, 0.5), (31L, 0.25)), 7L -> Set((70L, 0.5), (71L, 0.25))))
+    assert(graft.SparkEntry.singleByQuery(Array.empty[Long])(single).isEmpty)
+  }
+
   test("ivfTopKQuantizedBatch equals per-query ivfTopKQuantized; probe lists agree") {
     val data = randVecs(400, 16, seed = 9)
     val df = data.toDF("vec_id", "embedding").repartition(4)

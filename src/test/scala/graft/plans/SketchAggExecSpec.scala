@@ -193,6 +193,31 @@ class SketchAggExecSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.sketchAgg.flushBytes")
   }
 
+  test("long-key path: many byte-budget flushes give the unflushed aggregate's bytes") {
+    // a 4 KB budget holds ~10 groups, so each 5000-row partition flushes
+    // dozens of times and every chunk starts over the previous chunk's
+    // dropped buffers; the default budget never flushes here
+    def agg() = groups.groupBy(col("g")).agg(
+      bloom_agg(col("k"), 100, 0.01).as("b"), cms_agg(col("k"), 0.05, 0.05).as("c"))
+    def run(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq))
+      .sortBy(_._1).toSeq
+    def flushes(df: DataFrame) = collectPhysical(df)
+      .collectFirst { case p: SketchPartialAggExec => p.metrics("numFlushes").value }
+      .getOrElse(fail("custom partial operator missing from the plan"))
+    val unflushedDf = agg()
+    val unflushed = run(unflushedDf)
+    assert(flushes(unflushedDf) === 0)
+    spark.conf.set("spark.graft.sketchAgg.flushBytes", "4096")
+    try {
+      val flushedDf = agg()
+      val flushed = run(flushedDf)
+      assert(flushes(flushedDf) > 6 * 10, "expected dozens of flushes per partition")
+      assert(flushed.length === 500)
+      assert(flushed === unflushed)
+    } finally spark.conf.unset("spark.graft.sketchAgg.flushBytes")
+  }
+
   test("non-positive flush threshold fails fast instead of dropping data") {
     spark.conf.set("spark.graft.sketchAgg.flushThreshold", "0")
     try {
